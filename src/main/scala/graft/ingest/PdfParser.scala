@@ -937,20 +937,9 @@ object PdfParser {
             })
             case _ => None
           }
-          val end = len match {
-            case Some(l) if dataStart + l <= bytes.length &&
-              s.indexOf("endstream", dataStart + l) >= 0 &&
-              s.indexOf("endstream", dataStart + l) - (dataStart + l) <= 2 => dataStart + l
-            case _ =>
-              // untrustworthy /Length: search, trimming the pre-endstream EOL
-              val e0 = s.indexOf("endstream", dataStart)
-              if (e0 < 0) return None
-              var e = e0
-              if (e > dataStart && s.charAt(e - 1) == '\n') e -= 1
-              if (e > dataStart && s.charAt(e - 1) == '\r') e -= 1
-              e
+          streamEnd(s, dataStart, len).map { case (end, _) =>
+            (num, gen, PStream(d, bytes.slice(dataStart, end)))
           }
-          Some((num, gen, PStream(d, bytes.slice(dataStart, end))))
         } else Some((num, gen, d))
       case other => Some((num, gen, other))
     }
@@ -1098,6 +1087,33 @@ object PdfParser {
 
   // ------------------------------------------------ fallback + text engine
 
+  /** A direct `/Length N` in a raw dictionary text; an indirect
+    * `/Length N G R` (and `/Length1` etc.) does not match. */
+  private val DirectLength = """/Length\s+(\d{1,9})\b(?!\s+\d+\s+R)""".r
+
+  /** Where a stream's data ends, for data starting at `dataStart`:
+    * (end of data, exclusive; index of the `endstream` keyword). A /Length
+    * that lands on `endstream` (at most an EOL between) is exact, so data
+    * whose last byte happens to be CR or LF keeps it. Without a usable
+    * /Length, the data runs to the next `endstream`, minus the EOL the
+    * writer placed before the keyword. None when no `endstream` follows. */
+  private def streamEnd(s: String, dataStart: Int, len: Option[Int]): Option[(Int, Int)] = {
+    val exact = len.filter(l => l >= 0 && l <= s.length - dataStart).flatMap { l =>
+      val e = dataStart + l
+      (e to e + 2).find(s.startsWith("endstream", _)).map(k => (e, k))
+    }
+    exact.orElse {
+      val k = s.indexOf("endstream", dataStart)
+      if (k < 0) None
+      else {
+        var e = k
+        if (e > dataStart && s.charAt(e - 1) == '\n') e -= 1
+        if (e > dataStart && s.charAt(e - 1) == '\r') e -= 1
+        Some((e, k))
+      }
+    }
+  }
+
   /** All (stream dictionary, raw stream bytes) pairs, in file order. The
     * dictionary is kept as raw text — only filter names are needed.
     * Fallback for files without a usable cross-reference. */
@@ -1117,18 +1133,15 @@ object PdfParser {
           else -1
         if (dataStart < 0) { from = i + 6; true }
         else {
-          val end = s.indexOf("endstream", dataStart)
-          if (end < 0) false
-          else {
-            val dictStart = math.max(s.lastIndexOf("<<", i), 0)
-            val dict = s.substring(dictStart, i)
-            // trim the EOL the writer placed before `endstream`
-            var e = end
-            if (e > dataStart && s.charAt(e - 1) == '\n') e -= 1
-            if (e > dataStart && s.charAt(e - 1) == '\r') e -= 1
-            out += ((dict, bytes.slice(dataStart, e)))
-            from = end + 9
-            true
+          val dictStart = math.max(s.lastIndexOf("<<", i), 0)
+          val dict = s.substring(dictStart, i)
+          val len = DirectLength.findFirstMatchIn(dict).map(_.group(1).toInt)
+          streamEnd(s, dataStart, len) match {
+            case None => false
+            case Some((end, keyword)) =>
+              out += ((dict, bytes.slice(dataStart, end)))
+              from = keyword + 9
+              true
           }
         }
       }

@@ -964,7 +964,7 @@ object StatQueries {
     // r17 (guide §1.2 "per-task work" applied to the DRIVER): the body's
     // ~24 scalar-subquery references each re-inline their CTE's whole
     // subplan, and Catalyst paid ~3.3 s PLANNING the one-query form
-    // (DebugProbe: 14 jobs, 0.3 s of tasks, 3.4 s driver gap). The
+    // (profiled: 14 jobs, 0.3 s of tasks, 3.4 s driver gap). The
     // MULTIPLY-REFERENCED bounded frames (tot, h1, cls, h2) are staged
     // as checkpointed temp views so every scalar-subquery reference
     // resolves to a 1-row/≤100-row LocalTableScan; the once-used chains

@@ -1,6 +1,6 @@
 package graft.rag
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.VectorOps
@@ -55,15 +55,4 @@ object Rag {
   /** Full chat turn minus the external LLM call. */
   def ask(store: DataFrame, question: String, user: String, k: Int = DefaultK): String =
     prompt(question, contextOf(retrieve(store, question, user, k)))
-
-  /** Append-only chat log (reference app.py:436-443) as a batch append; the
-    * streaming form lives in graft.streaming.ChatLog. */
-  def logChat(spark: SparkSession, path: String, user: String, question: String,
-      answer: String, tsMicros: Long): Unit = {
-    import spark.implicits._
-    Seq((tsMicros, user, question, answer))
-      .toDF("ts_us", "user", "question", "answer")
-      .select(timestamp_micros(col("ts_us")).as("ts"), col("user"), col("question"), col("answer"))
-      .write.mode("append").parquet(path)
-  }
 }

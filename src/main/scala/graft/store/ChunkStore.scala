@@ -3,6 +3,7 @@ package graft.store
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 /** Persistent chunk store — the engine's durable table, replacing the
@@ -11,90 +12,23 @@ import org.apache.spark.sql.functions._
   * for retrieval (fixing the cross-user leakage of app.py:409 — SURVEY.md
   * X5), and `source` turns delete-by-filename into a partition drop — the
   * reference's delete fetches the WHOLE collection to the client and
-  * filters in Python (multiple_document_upload.py:182-189); here it never
-  * reads a data file at all.
+  * filters in Python (multiple_document_upload.py:182-189); here it reads
+  * only the one directory it drops.
   *
-  * 100 TB note: (user, source) partitioning assumes many users × many
-  * files; for a pathological single-tenant skew (one user or one file
-  * holding a dominant share of the corpus) pass `skewBuckets > 1` to
-  * [[append]] — a deterministic hash-of-chunk_id bucket becomes a third
-  * partition level under source, splitting the hot directory into
-  * independently plannable/compactable slices while user-prefix pruning
-  * and the recursive delete keep working unchanged. Upgrade path to
-  * in-place mutation (tombstones, upserts) is a Delta/Iceberg table
-  * format — out of scope per SURVEY.md §7.4 risk 6.
+  * Upgrade path to in-place mutation (tombstones, upserts) is a
+  * Delta/Iceberg table format — out of scope per SURVEY.md §7.4 risk 6.
   */
 object ChunkStore {
 
   /** Append chunk rows (schema from ChunkRow) to the store. First write
     * creates the store — the reference's create-or-append branch at
     * multiple_document_upload.py:161-168 is `mode("append")` semantics for
-    * free.
-    *
-    * `skewBuckets > 1` adds a `bucket` partition level under source
-    * (hash of chunk_id, so a chunk lands in the same bucket on every
-    * append — re-ingest dedup semantics survive). Pick per STORE, at
-    * creation: mixing bucketed and unbucketed appends into one store
-    * would fork the directory schema. */
-  def append(chunks: DataFrame, path: String, skewBuckets: Int = 1): Unit = {
-    require(skewBuckets >= 1, s"skewBuckets must be >= 1, got $skewBuckets")
-    requireLayoutMatches(chunks.sparkSession, path, bucketed = skewBuckets > 1)
-    if (skewBuckets == 1)
-      chunks.write.mode("append").partitionBy("user", "source").parquet(path)
-    else
-      chunks
-        .withColumn("bucket",
-          pmod(xxhash64(col("chunk_id")), lit(skewBuckets.toLong)).cast("int"))
-        .write.mode("append").partitionBy("user", "source", "bucket").parquet(path)
-  }
+    * free. */
+  def append(chunks: DataFrame, path: String): Unit =
+    chunks.write.mode("append").partitionBy("user", "source").parquet(path)
 
-  /** Fail a mismatched append LOUDLY at write time: mixing bucketed and
-    * unbucketed appends forks the directory schema, and Spark's partition
-    * discovery would only surface it at some later read ("conflicting
-    * directory structures"), far from the faulty write. The probe is one
-    * directory listing per level (user → source → children), never a
-    * recursive walk. */
-  private def requireLayoutMatches(spark: SparkSession, path: String, bucketed: Boolean): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(path))) return // new store: the write defines the layout
-    def firstDir(p: Path, prefix: String): Option[Path] =
-      fs.listStatus(p).find(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-        .map(_.getPath)
-    val existing = for {
-      u <- firstDir(new Path(path), "user=")
-      s <- firstDir(u, "source=")
-    } yield firstDir(s, "bucket=").isDefined
-    existing.foreach { isBucketed =>
-      require(isBucketed == bucketed,
-        s"store $path is ${if (isBucketed) "skew-bucketed" else "unbucketed"}; " +
-          s"append with ${if (bucketed) "skewBuckets > 1" else "skewBuckets = 1"} " +
-          "would fork the directory schema (pick the layout per store, at creation)")
-    }
-  }
-
-  /** Append with single-pass telemetry: the metrics a production ingest
-    * would emit are computed by `observe` DURING the write — no second
-    * scan of the data. Returns (n_chunks, n_users_approx, text_bytes);
-    * the tenant count is HLL-approximate (~2% relative error at high
-    * cardinality — observe() cannot host exact distinct aggregates),
-    * exact at the small per-batch cardinalities typical of ingest. */
-  def appendObserved(chunks: DataFrame, path: String,
-      skewBuckets: Int = 1): (Long, Long, Long) = {
-    val obs = new org.apache.spark.sql.Observation("chunk-append")
-    append(chunks.observe(obs,
-      // fully qualified: ChunkStore.count(spark, path) shadows functions.count
-      org.apache.spark.sql.functions.count(lit(1)).as("n_chunks"),
-      approx_count_distinct(col("user")).as("n_users"),
-      sum(length(col("text")).cast("long")).as("text_bytes")), path, skewBuckets)
-    val m = obs.get
-    (m("n_chunks").asInstanceOf[Long], m("n_users").asInstanceOf[Long],
-      m.get("text_bytes").collect { case b: Long => b }.getOrElse(0L))
-  }
-
-  def load(spark: SparkSession, path: String): DataFrame = {
-    recover(spark, path)
+  def load(spark: SparkSession, path: String): DataFrame =
     spark.read.option("basePath", path).parquet(path)
-  }
 
   /** True when the store has no data: missing directory OR a directory
     * with no parquet files left — the delete-everything state (only
@@ -102,7 +36,6 @@ object ChunkStore {
     * and then fail schema inference inside load(). Short-circuits on the
     * first data file found. */
   def isEmpty(spark: SparkSession, path: String): Boolean = {
-    recover(spark, path)
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(path))) return true
     val it = fs.listFiles(new Path(path), true)
@@ -110,24 +43,6 @@ object ChunkStore {
       if (it.next().getPath.getName.endsWith(".parquet")) return false
     }
     true
-  }
-
-  /** Crash recovery for [[compact]]'s two-rename swap: if a crash landed
-    * between staging out the live store and swapping the compacted copy
-    * in, the store directory is missing but `<path>.precompact` holds the
-    * intact original — restore it. Called by every entry point that
-    * inspects the store path, so a half-finished compaction can never
-    * present as an empty store (which would silently fork a new store and
-    * defeat chunk-level dedup). */
-  private def recover(spark: SparkSession, path: String): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new Path(path)
-    val backup = new Path(path + ".precompact")
-    if (!fs.exists(live) && fs.exists(backup)) {
-      if (!fs.rename(backup, live))
-        throw new java.io.IOException(
-          s"store recovery: could not restore $backup to $path")
-    }
   }
 
   /** Collection count (reference startup log, app.py:79). A store whose
@@ -143,80 +58,22 @@ object ChunkStore {
   def userScoped(store: DataFrame, user: String): DataFrame =
     store.filter(col("user") === user)
 
-  /** Compact the store's data files: every micro-batch append writes at
-    * least one file per touched (user, source) partition, so a streaming
-    * ingest accumulates small files until scan planning and footer reads
-    * dominate — the classic 100 TB small-file problem. Rewrites the store
-    * into at most `filesPerPartition` files per partition directory via a
-    * staged overwrite (write to `<path>.compacting`, swap directories),
-    * so a crash mid-compact never loses data: a crash before the stage-out
-    * leaves the original untouched, and a crash between the two renames
-    * leaves the original in `<path>.precompact`, from which every store
-    * entry point auto-restores (see [[recover]]). Returns the row count
-    * (unchanged by compaction; callers can assert on it).
-    *
-    * At real scale this runs per-partition (compact only directories whose
-    * file count exceeds a threshold) under a table-format transaction; the
-    * staged-swap here is the single-writer equivalent. */
-  def compact(spark: SparkSession, path: String, filesPerPartition: Int = 1): Long = {
-    if (isEmpty(spark, path)) return 0L
-    val store = load(spark, path)
-    val n = store.count()
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(path + ".compacting")
-    val backup = new Path(path + ".precompact")
-    if (fs.exists(staging)) fs.delete(staging, true)
-    // a skew-bucketed store keeps its bucket level through compaction
-    val partCols =
-      if (store.columns.contains("bucket")) Seq("user", "source", "bucket")
-      else Seq("user", "source")
-    // shuffle on (partition cols, bounded salt): a directory's rows land in
-    // at most `filesPerPartition` distinct shuffle keys → at most that many
-    // tasks → at most that many files per partition directory
-    store
-      .repartition(partCols.map(col) :+
-        pmod(xxhash64(col("chunk_id")), lit(filesPerPartition.toLong)): _*)
-      .write.mode("overwrite").partitionBy(partCols: _*).parquet(staging.toString)
-    if (fs.exists(backup)) fs.delete(backup, true)
-    if (!fs.rename(new Path(path), backup))
-      throw new java.io.IOException(s"compact: could not stage out $path")
-    if (!fs.rename(staging, new Path(path))) {
-      fs.rename(backup, new Path(path)) // roll back
-      throw new java.io.IOException(s"compact: could not swap in $staging")
-    }
-    fs.delete(backup, true)
-    n
-  }
-
-  /** Number of parquet data files currently backing the store. */
-  def dataFileCount(spark: SparkSession, path: String): Long = {
-    if (isEmpty(spark, path)) return 0L
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(new Path(path), true)
-    var n = 0L
-    while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-    n
-  }
-
   /** Delete every chunk of `source` (lowercased filename) owned by `user` —
     * the reference's delete-by-filename (multiple_document_upload.py:178-200)
     * as a partition drop, tenant-scoped: the reference's delete is global
     * only because its whole store is global; with per-user retrieval a
-    * same-named file of another tenant must survive. Partition values are
-    * Hive-escaped exactly as Spark wrote them (a literal `source=<raw>`
-    * path would miss any filename containing %, #, = …). Returns the
-    * number of deleted rows (0 = the reference's "No vectors found"). */
+    * same-named file of another tenant must survive. Only the target
+    * directory is listed and counted, never the rest of the store.
+    * Partition values are Hive-escaped exactly as Spark wrote them (a
+    * literal `source=<raw>` path would miss any filename containing %, #,
+    * = …). Returns the number of deleted rows (0 = the reference's "No
+    * vectors found"). */
   def deleteBySource(spark: SparkSession, path: String, user: String, source: String): Long = {
-    if (isEmpty(spark, path)) return 0L
-    val store = load(spark, path)
-    val target = source.toLowerCase
-    val n = store.filter(col("user") === user && col("source") === target).count()
-    if (n > 0) {
-      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName _
-      val srcDir = new Path(path, s"user=${esc(user)}/source=${esc(target)}")
-      if (fs.exists(srcDir)) fs.delete(srcDir, true)
-    }
+    val esc = ExternalCatalogUtils.escapePathName _
+    val srcDir = new Path(path, s"user=${esc(user)}/source=${esc(source.toLowerCase)}")
+    if (isEmpty(spark, srcDir.toString)) return 0L
+    val n = spark.read.parquet(srcDir.toString).count()
+    srcDir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(srcDir, true)
     n
   }
 }

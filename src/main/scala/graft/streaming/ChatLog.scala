@@ -19,8 +19,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * 100 TB note: the canonical log inherits appendSink's parquet layout;
   * a production deployment would leave the relay running continuously
-  * (micro-batches amortize the per-file overhead) and compact the log
-  * with ChunkStore.compact-style rewrites. The facade flushes per turn
+  * (micro-batches amortize the per-file overhead) and periodically rewrite
+  * the log's small files into fewer large ones. The facade flushes per turn
   * only to give read-your-write semantics under test.
   */
 object ChatLog {

@@ -2,6 +2,8 @@ package graft.api
 
 import java.nio.charset.StandardCharsets
 
+import org.scalatest.BeforeAndAfterEach
+
 import graft.SparkSpec
 import graft.auth.Jwt
 
@@ -9,8 +11,13 @@ import graft.auth.Jwt
   * workflow (login → upload → chat → delete) with the behaviors the
   * reference gets wrong done right: tenant isolation in retrieval,
   * per-tenant dedup and delete. */
-class EngineSpec extends SparkSpec {
+class EngineSpec extends SparkSpec with BeforeAndAfterEach {
   import spark.implicits._
+
+  // every Engine starts a chat-log relay that polls its landing directory;
+  // none may outlive its test and keep listing files under later suites
+  override def afterEach(): Unit =
+    try spark.streams.active.foreach(_.stop()) finally super.afterEach()
 
   private def bytes(s: String) = s.getBytes(StandardCharsets.UTF_8)
 
@@ -92,6 +99,9 @@ class EngineSpec extends SparkSpec {
     e1.chat(t1, "second turn").toOption.get
     // the canonical log is the relay's OUTPUT, not the landing dir
     assert(ChatLog.read(spark, chatDir).count() == 2)
+    val chatColumns = Set("ts", "user", "question", "answer")
+    assert(ChatLog.read(spark, chatDir).columns.toSet == chatColumns)
+    assert(spark.read.parquet(chatDir).columns.toSet == chatColumns)
     assert(spark.streams.active.exists(_.name == ChatLog.relayName(chatDir)))
     e1.shutdown()
     assert(!spark.streams.active.exists(_.name == ChatLog.relayName(chatDir)))

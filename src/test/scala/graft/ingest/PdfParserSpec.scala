@@ -121,6 +121,12 @@ class PdfParserSpec extends AnyFunSuite {
     val content = "BT (Compressed text works) Tj ET"
     val doc = pdf("/Filter /FlateDecode" -> deflate(content))
     assert(PdfParser.pdf(doc) == Right(Seq("Compressed text works")))
+    // deflate output whose last byte is CR: the direct /Length keeps it,
+    // where trimming the pre-endstream EOL would truncate the stream
+    val crLast = "BT (Carriage return as trailing byte remains whole) Tj ET"
+    assert(deflate(crLast).last == '\r')
+    assert(PdfParser.pdf(pdf("/Filter /FlateDecode" -> deflate(crLast))) ==
+      Right(Seq("Carriage return as trailing byte remains whole")))
   }
 
   test("literal string escapes: nested parens, octal, backslash escapes") {

@@ -41,13 +41,4 @@ class RagSpec extends SparkSpec {
     assert(p.contains("Question: what does spark do"))
     assert(p.contains("spark"))
   }
-
-  test("chat log appends timestamped records") {
-    val dir = tmpDir("chatlog").toString + "/log"
-    Rag.logChat(spark, dir, "a@x.com", "q1", "a1", 1700000000000000L)
-    Rag.logChat(spark, dir, "a@x.com", "q2", "a2", 1700000060000000L)
-    val log = spark.read.parquet(dir)
-    assert(log.count() == 2)
-    assert(log.columns.toSet == Set("ts", "user", "question", "answer"))
-  }
 }

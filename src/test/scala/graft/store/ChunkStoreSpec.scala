@@ -2,6 +2,10 @@ package graft.store
 
 import java.nio.charset.StandardCharsets
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.metrics.source.HiveCatalogMetrics
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+
 import graft.SparkSpec
 import graft.ingest.IngestPipeline
 
@@ -25,7 +29,11 @@ class ChunkStoreSpec extends SparkSpec {
     // partition columns survive the round-trip
     val loaded = ChunkStore.load(spark, dir)
     assert(loaded.columns.toSet.contains("user") && loaded.columns.toSet.contains("source"))
-    assert(ChunkStore.userScoped(loaded, "a@x.com").count() == b1.chunks.count())
+    val scoped = ChunkStore.userScoped(loaded, "a@x.com")
+    assert(scoped.count() == b1.chunks.count())
+    // the tenancy filter prunes directories, it does not filter rows
+    val plan = scoped.queryExecution.executedPlan.toString
+    assert("""PartitionFilters: \[[^\]]*\buser#""".r.findFirstIn(plan).isDefined, plan)
   }
 
   test("deleteBySource drops exactly that tenant's file and returns the count") {
@@ -47,117 +55,30 @@ class ChunkStoreSpec extends SparkSpec {
     assert(ChunkStore.deleteBySource(spark, dir, "a@x.com", "missing.txt") == 0L)
   }
 
-  test("compact rewrites many small appends into one file per partition, same rows") {
+  test("deleteBySource lists only the target directory, not the other tenants") {
     val dir = tmpDir("store").toString + "/chunks"
-    // simulate a streaming ingest: many tiny appends to the same partitions
-    val batches = (1 to 6).map { i =>
-      ingestOne(s"/up/f$i.txt", if (i % 2 == 0) "a@x.com" else "b@y.com",
-        (1 to 150).map(j => s"w${i}_$j").mkString(" "))
+    val docs = (1 to 6).map { i =>
+      ingestOne(s"/up/doc$i.txt", s"u$i@x.com", (1 to 200).map(j => s"t${i}_$j").mkString(" "))
     }
-    batches.foreach(b => ChunkStore.append(b.chunks, dir))
-    val total = ChunkStore.count(spark, dir)
-    val filesBefore = ChunkStore.dataFileCount(spark, dir)
-    assert(filesBefore >= 6, s"expected one file per append, saw $filesBefore")
+    docs.foreach(b => ChunkStore.append(b.chunks, dir))
+    // a second append gives the target directory more than one data file
+    ChunkStore.append(docs.head.chunks, dir)
+    val nTarget = 2 * docs.head.chunks.count()
+    val nKept = docs.tail.map(_.chunks.count()).sum
 
-    assert(ChunkStore.compact(spark, dir) == total)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val esc = ExternalCatalogUtils.escapePathName _
+    val targetDir = new Path(dir, s"user=${esc("u1@x.com")}/source=doc1.txt")
+    val targetFiles = fs.listStatus(targetDir).count(_.getPath.getName.endsWith(".parquet"))
+    assert(targetFiles >= 2)
 
-    // 6 distinct (user, source) partitions → exactly 6 files at 1/partition
-    assert(ChunkStore.dataFileCount(spark, dir) == 6L)
-    assert(ChunkStore.count(spark, dir) == total)
-    // content identical, not just counts
-    val ids = ChunkStore.load(spark, dir).select("chunk_id").as[Long].collect().sorted.toSeq
-    val want = batches.flatMap(_.chunks.select("chunk_id").as[Long].collect()).sorted
-    assert(ids == want)
-    // store stays functional: tenancy scoping and delete still work
-    assert(ChunkStore.deleteBySource(spark, dir, "a@x.com", "f2.txt") > 0)
-  }
-
-  test("appendObserved reports single-pass write telemetry matching the data") {
-    val dir = tmpDir("store").toString + "/chunks"
-    val b1 = ingestOne("/up/a.txt", "a@x.com", (1 to 300).map(i => s"w$i").mkString(" "))
-    val b2 = ingestOne("/up/b.txt", "b@y.com", "short doc")
-    val all = b1.chunks.unionByName(b2.chunks)
-    val (n, users, bytes) = ChunkStore.appendObserved(all, dir)
-    assert(n == all.count())
-    assert(users == 2L)
-    val wantBytes = all.selectExpr("sum(length(text))").head().getLong(0)
-    assert(bytes == wantBytes)
-    assert(ChunkStore.count(spark, dir) == n)
-  }
-
-  test("compact on an empty/missing store is a no-op") {
-    val dir = tmpDir("store").toString + "/chunks"
-    assert(ChunkStore.compact(spark, dir) == 0L)
-  }
-
-  test("a crash between compact's renames auto-recovers on next access") {
-    val dir = tmpDir("store").toString + "/chunks"
-    val b = ingestOne("/up/a.txt", "a@x.com", (1 to 300).map(i => s"w$i").mkString(" "))
-    ChunkStore.append(b.chunks, dir)
-    val total = ChunkStore.count(spark, dir)
-    // simulate the crash window: live dir staged out, compacted copy never
-    // swapped in — the store path is missing, .precompact holds the data
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(dir + ".precompact")))
-    // every entry point must see the original store, not an empty one
-    assert(!ChunkStore.isEmpty(spark, dir))
-    assert(ChunkStore.count(spark, dir) == total)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + ".precompact")))
-  }
-
-  test("skew-bucketed store: same rows, pruning intact, delete and compact still work") {
-    val dir = tmpDir("store").toString + "/chunks"
-    // one giant tenant file — the skew shape skewBuckets exists for
-    val big = ingestOne("/up/giant.txt", "whale@x.com",
-      (1 to 3000).map(i => s"w$i").mkString(" "))
-    val small = ingestOne("/up/tiny.txt", "b@y.com", "short doc")
-    ChunkStore.append(big.chunks, dir, skewBuckets = 4)
-    ChunkStore.append(small.chunks, dir, skewBuckets = 4)
-    val total = big.chunks.count() + small.chunks.count()
-    assert(ChunkStore.count(spark, dir) == total)
-
-    // the hot (user, source) directory split across several bucket dirs
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName _
-    val whaleDir = new org.apache.hadoop.fs.Path(
-      dir, s"user=${esc("whale@x.com")}/source=${esc("giant.txt")}")
-    val buckets = fs.listStatus(whaleDir).filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.startsWith("bucket="))
-    assert(buckets.length >= 2, s"expected multiple buckets, saw ${buckets.toSeq}")
-
-    // retrieval: identical rows, and the tenancy filter still prunes at
-    // the partition level (user= is the path prefix above bucket=)
-    val loaded = ChunkStore.load(spark, dir)
-    val scoped = ChunkStore.userScoped(loaded, "whale@x.com")
-    assert(scoped.count() == big.chunks.count())
-    val plan = scoped.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("user"), plan)
-
-    // a chunk's bucket is a pure function of chunk_id: the same chunk
-    // re-appended lands in the same bucket (no cross-bucket duplicates)
-    ChunkStore.append(big.chunks, dir, skewBuckets = 4)
-    val perBucket = ChunkStore.load(spark, dir)
-      .filter($"user" === "whale@x.com")
-      .groupBy($"chunk_id").agg(
-        org.apache.spark.sql.functions.countDistinct($"bucket").as("nb"))
-      .filter($"nb" > 1).count()
-    assert(perBucket == 0, "a re-appended chunk changed bucket")
-
-    // a mismatched append fails loudly at write time, not at a later read
-    val e = intercept[IllegalArgumentException] {
-      ChunkStore.append(small.chunks, dir) // default skewBuckets = 1
-    }
-    assert(e.getMessage.contains("fork the directory schema"))
-
-    // compact preserves the bucket level; delete drops the whole tenant file
-    ChunkStore.compact(spark, dir)
-    assert(fs.listStatus(whaleDir).exists(_.getPath.getName.startsWith("bucket=")))
-    assert(ChunkStore.deleteBySource(spark, dir, "whale@x.com", "giant.txt") ==
-      2 * big.chunks.count())
-    assert(ChunkStore.count(spark, dir) == small.chunks.count())
+    val discovered0 = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
+    assert(ChunkStore.deleteBySource(spark, dir, "u1@x.com", "doc1.txt") == nTarget)
+    // the counter is JVM-wide: a running stream would add its own listings
+    assert(HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount - discovered0 == targetFiles,
+      s"active streams: ${spark.streams.active.map(_.name).mkString(", ")}")
+    assert(!fs.exists(targetDir))
+    assert(ChunkStore.count(spark, dir) == nKept)
   }
 
   test("deleteBySource handles sources needing Hive partition escaping") {
